@@ -16558,9 +16558,9 @@ def _event_value_percentile_bins(spark: SparkSession, sf: str) -> DataFrame:
     p50/p95/p99 ESTIMATES from log2-histogram state
     (profile.histogram_partials → histogram_percentiles — all-integer
     rank pick and bucket midpoints, so the HDR-style sketch is fully
-    oracle-checkable; the streaming build_histogram_ingest_query
-    folds the identical partials and is parity-tested streamed ==
-    batch)."""
+    oracle-checkable; the streaming build_state_ingest_query over
+    histogram_partials folds the identical partials and is
+    parity-tested streamed == batch)."""
     parts = profile.histogram_partials(
         _events(spark, sf), ["event_type"], "value"
     )

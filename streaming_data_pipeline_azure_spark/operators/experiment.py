@@ -123,7 +123,8 @@ def variant_partials(
     HLL distinct, CMS frequency, bottom-k samples — this is the
     metric-moments member). ``n_units`` is deliberately absent: a
     distinct count is not mergeable; pair the readout with the HLL
-    family if per-variant unit counts are needed at serve time."""
+    family if per-variant unit counts are needed at serve time. One
+    output partition: the partial is ``n_variants`` rows."""
     d = F.col(metric_col).cast("decimal(18,4)")
     return (
         df.select(
@@ -138,6 +139,7 @@ def variant_partials(
             F.sum("__m").alias("s"),
             F.sum(F.col("__m") * F.col("__m")).alias("ss"),
         )
+        .coalesce(1)
     )
 
 

@@ -13,10 +13,20 @@ custom-semantics spot):
   the dimension is immutable for the query's lifetime.
 - ``refresh="per_batch"``: ASA periodically re-snapshots its SQL reference
   input, so to match those semantics we join *inside* ``foreachBatch`` and
-  call ``customers_loader()`` each batch (or each ``refresh_every`` batches).
-  A JDBC DataFrame is lazily re-executed on next action, so reloading is a
-  cheap re-read of a 10k-row dimension, and the join inside foreachBatch is
-  a batch broadcast join — same plan shape, fresh data.
+  call ``customers_loader()`` every batch. A JDBC DataFrame is lazily
+  re-executed on next action, so reloading is a cheap re-read of a
+  10k-row dimension, and the join inside foreachBatch is a batch
+  broadcast join — same plan shape, fresh data.
+
+Every foreachBatch query here shares one exactly-once policy: a
+replayable source plus a per-micro-batch write that is safe to repeat.
+``_start`` starts each query, and each persisted output goes through
+:func:`~streaming_data_pipeline_azure_spark.sources.sinks.
+write_batch_partition`, which replaces partition ``batch_id=N`` and
+nothing else. The enrichment sink, the corpus ingests (dedup, span
+scrub, novelty) and :func:`build_state_ingest_query` (every mergeable-
+state family, each a ``*_partials`` function plus a ``read_*`` merger)
+all write that way.
 """
 
 from __future__ import annotations
@@ -31,7 +41,10 @@ from streaming_data_pipeline_azure_spark.operators.enrich import (
     enrich_orders,
     with_document_id,
 )
-from streaming_data_pipeline_azure_spark.sources.sinks import ParquetUpsertSink
+from streaming_data_pipeline_azure_spark.sources.sinks import (
+    ParquetUpsertSink,
+    write_batch_partition,
+)
 
 
 def build_enrichment_query(
@@ -41,8 +54,6 @@ def build_enrichment_query(
     checkpoint_dir: str,
     *,
     refresh: str = "static",
-    refresh_every: int = 1,
-    add_document_id: bool = True,
     trigger_available_now: bool = False,
     observe_quality: bool = False,
     **enrich_kwargs,
@@ -64,8 +75,7 @@ def build_enrichment_query(
         enriched = enrich_orders(orders_stream, customers_df, **enrich_kwargs)
 
         def write(batch_df: DataFrame, batch_id: int) -> None:
-            out = with_document_id(batch_df) if add_document_id else batch_df
-            sink.write_batch(out, batch_id)
+            sink.write_batch(with_document_id(batch_df), batch_id)
 
         if observe_quality:
             enriched = enriched.observe(
@@ -86,22 +96,28 @@ def build_enrichment_query(
             )
         if not callable(customers):
             raise TypeError("per_batch refresh needs a customers loader callable")
-        state = {"dim": None}
 
         def write(batch_df: DataFrame, batch_id: int) -> None:
-            if state["dim"] is None or batch_id % max(refresh_every, 1) == 0:
-                state["dim"] = customers()
-            out = enrich_orders(batch_df, state["dim"], **enrich_kwargs)
-            if add_document_id:
-                out = with_document_id(out)
-            sink.write_batch(out, batch_id)
+            out = enrich_orders(batch_df, customers(), **enrich_kwargs)
+            sink.write_batch(with_document_id(out), batch_id)
 
         stream_to_write = orders_stream
     else:
         raise ValueError(f"unknown refresh mode {refresh!r}")
 
+    return _start(stream_to_write, checkpoint_dir, write, trigger_available_now)
+
+
+def _start(
+    stream: DataFrame,
+    checkpoint_dir: str,
+    write: Callable[[DataFrame, int], None],
+    trigger_available_now: bool,
+) -> StreamingQuery:
+    """Start ``stream`` as a checkpointed append-mode foreachBatch
+    query running ``write(batch_df, batch_id)`` per micro-batch."""
     writer = (
-        stream_to_write.writeStream.outputMode("append")
+        stream.writeStream.outputMode("append")
         .option("checkpointLocation", checkpoint_dir)
         .foreachBatch(write)
     )
@@ -117,6 +133,47 @@ def run_to_completion(query: StreamingQuery, timeout_sec: float = 120.0) -> None
         raise TimeoutError("streaming query did not drain in time")
     if query.exception() is not None:
         raise query.exception()
+
+
+def build_state_ingest_query(
+    stream: DataFrame,
+    partials: Callable[[DataFrame], DataFrame],
+    state_path: str,
+    checkpoint_dir: str,
+    *,
+    trigger_available_now: bool = False,
+) -> StreamingQuery:
+    """Streaming MERGEABLE-STATE ingest: ``partials`` maps each micro-
+    batch to its mergeable rows, which persist at
+    ``state_path/batch_id=N`` (:func:`write_batch_partition`), so the
+    stream's state is servable at any time without reprocessing
+    history.
+
+    Replay-idempotence: a replayed micro-batch (crash between the
+    state write and the checkpoint commit) rewrites identical partials
+    into its own partition instead of double-counting — most merges
+    here (CMS adds, counts, decimal sums) are NOT idempotent, the
+    per-batch partition IS the idempotence boundary. State grows
+    O(batches) small rows per group.
+
+    The families (partials → reader; each reader's merge scores
+    identically to one batch pass over the union, parity-tested):
+
+    - frequency: ``profile.cms_partials`` → :func:`read_heavy_hitters`
+    - distinct: ``profile.distinct_partials`` → :func:`read_distinct_counts`
+    - drift: :func:`drift_partials` → :func:`read_drift`
+    - A/B moments: ``experiment.variant_partials`` → :func:`read_ab_readout`
+    - leaderboard: :func:`topk_partials` → :func:`read_topk`
+    - integrity: ``validate.table_checksum`` → :func:`read_checksum`
+    - OHLC bars: :func:`ohlc_partials` → :func:`read_ohlc`
+    - recency-weighted sums: :func:`decayed_partials` → :func:`read_decayed`
+    - quantiles: ``profile.histogram_partials`` →
+      :func:`read_histogram_percentiles`"""
+
+    def write(batch_df: DataFrame, batch_id: int) -> None:
+        write_batch_partition(partials(batch_df), state_path, batch_id)
+
+    return _start(stream, checkpoint_dir, write, trigger_available_now)
 
 
 def build_dedup_ingest_query(
@@ -151,10 +208,11 @@ def build_dedup_ingest_query(
     The survivors are materialized once (``localCheckpoint``) because
     they feed two writes, and BOTH writes are replay-idempotent: the
     accepted table is laid out as ``accepted_path/batch_id=N/`` and each
-    batch OVERWRITES its own partition directory, so a crash between the
-    accepted write and the index fold-in makes the replay recompute the
-    same survivor set (the index still lacks it) and rewrite the same
-    directory in place — no duplicate rows, unlike a plain append
+    batch OVERWRITES its own partition (:func:`write_batch_partition`),
+    so a crash between the accepted write and the index fold-in makes
+    the replay recompute the same survivor set (the index still lacks
+    it) and rewrite the same partition — no duplicate rows, unlike a
+    plain append
     (ADVICE r4). A crash *after* the fold-in leaves the replayed
     survivor set empty, so the early return preserves the already-
     written partition. Readers see ``batch_id`` as an ordinary partition
@@ -181,23 +239,14 @@ def build_dedup_ingest_query(
         if survivors.isEmpty():
             release_caches()
             return
-        survivors.write.mode("overwrite").parquet(
-            f"{accepted_path}/batch_id={batch_id}"
-        )
+        write_batch_partition(survivors, accepted_path, batch_id)
         fold(survivors)
         state["accepted_batches"] += 1
         if compact_every and state["accepted_batches"] % compact_every == 0:
             index.compact(batch_df.sparkSession)
         release_caches()  # drop the probe's persisted batch tables
 
-    writer = (
-        doc_stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(write)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(doc_stream, checkpoint_dir, write, trigger_available_now)
 
 
 def build_span_scrub_ingest_query(
@@ -243,115 +292,11 @@ def build_span_scrub_ingest_query(
         if accepted.isEmpty():
             release_caches()
             return
-        accepted.write.mode("overwrite").parquet(
-            f"{accepted_path}/batch_id={batch_id}"
-        )
+        write_batch_partition(accepted, accepted_path, batch_id)
         index.append(accepted, id_col, text_col)
         release_caches()
 
-    writer = (
-        doc_stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(write)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def build_cms_ingest_query(
-    value_stream: DataFrame,
-    col: str,
-    state_path: str,
-    checkpoint_dir: str,
-    *,
-    depth: int = 4,
-    width: int = 2048,
-    candidates_per_partition: int = 64,
-    seed: int = 42,
-    trigger_available_now: bool = False,
-) -> StreamingQuery:
-    """Streaming heavy-hitters state (r6): each micro-batch folds its
-    Count-Min partials into a persisted sketch store, so the stream's
-    approximate top-k is servable at any time without reprocessing —
-    the SKETCH member of the streaming-ingest family (dedup / span-
-    scrub / embedding ingests maintain indexes; this maintains a
-    fixed-memory frequency state).
-
-    Replay-idempotence, same contract as the other ingests: batch N's
-    partials land at ``state_path/batch_id=N`` with OVERWRITE, so a
-    replayed micro-batch (crash between the state write and the
-    checkpoint commit) rewrites identical partials instead of
-    double-counting — CMS adds are NOT idempotent, the per-batch
-    partition IS the idempotence boundary. State grows O(batches)
-    fixed-size rows; read with :func:`read_heavy_hitters`, which merges
-    exactly (CMS merge is an elementwise add, so any batch slicing
-    scores identically to one pass over the union — parity-tested).
-    """
-    from streaming_data_pipeline_azure_spark.operators.profile import (
-        cms_partials,
-    )
-
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        cms_partials(
-            batch_df, col, depth=depth, width=width,
-            candidates_per_partition=candidates_per_partition, seed=seed,
-        ).write.mode("overwrite").parquet(
-            f"{state_path}/batch_id={batch_id}"
-        )
-
-    writer = (
-        value_stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(write)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def build_hll_ingest_query(
-    value_stream: DataFrame,
-    group_cols: list[str],
-    col: str,
-    state_path: str,
-    checkpoint_dir: str,
-    *,
-    lgk: int = 12,
-    pre: list | None = None,
-    trigger_available_now: bool = False,
-) -> StreamingQuery:
-    """Streaming distinct-count state (r7): each micro-batch folds its
-    per-group HLL sketches into a persisted state store, so "distinct
-    users per day so far" is servable at any time without reprocessing
-    history — the DISTINCT member of the streaming sketch family next
-    to :func:`build_cms_ingest_query` (frequency).
-
-    Replay-idempotence, same contract as the other ingests: batch N's
-    partials land at ``state_path/batch_id=N`` with OVERWRITE. HLL
-    register updates are max-merges (idempotent per element), but a
-    replayed batch could otherwise APPEND duplicate partial rows —
-    the per-batch partition is the replay boundary. State grows
-    O(batches x groups) ~4 KB rows; read with
-    :func:`read_distinct_counts`, whose ``hll_union_agg`` merge is
-    bit-identical to a single pass over the union (tested)."""
-    from streaming_data_pipeline_azure_spark.operators.profile import (
-        distinct_partials,
-    )
-
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        distinct_partials(
-            batch_df, group_cols, col, lgk=lgk, pre=pre
-        ).write.mode("overwrite").parquet(f"{state_path}/batch_id={batch_id}")
-
-    writer = (
-        value_stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(write)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(doc_stream, checkpoint_dir, write, trigger_available_now)
 
 
 def read_distinct_counts(
@@ -391,51 +336,26 @@ def build_join_view_ingest_query(
         # stream batches re-use id 0.. ; build rows are stamped -1
         view.refresh(delta_left=batch_df, batch_id=int(batch_id))
 
-    writer = (
-        left_stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(write)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(left_stream, checkpoint_dir, write, trigger_available_now)
 
 
-def build_drift_ingest_query(
-    value_stream: DataFrame,
-    value_col: str,
-    bounds: list,
-    state_path: str,
-    checkpoint_dir: str,
-    *,
-    trigger_available_now: bool = False,
-) -> StreamingQuery:
-    """Streaming drift state (r7): each micro-batch's values bucket
-    against FIXED reference boundaries and the per-bucket counts
-    persist at replay-idempotent ``batch_id=N`` overwrite partitions —
-    the monitoring member of the streaming sketch family (fixed
-    boundaries make bucket counts trivially mergeable: plain addition).
-    Serve with :func:`read_drift`; micro-batched state scores
-    IDENTICALLY to one batch pass over the union (tested)."""
+def drift_partials(
+    batch_df: DataFrame, value_col: str, bounds: list
+) -> DataFrame:
+    """Mergeable drift partial: per-bucket counts of ``value_col``
+    against FIXED reference boundaries — fixed boundaries make bucket
+    counts trivially mergeable state (plain addition). One output
+    partition: a micro-batch's state is a handful of rows."""
     from streaming_data_pipeline_azure_spark.operators.validate import (
         bucketize,
     )
 
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        bucketize(batch_df, value_col, bounds).groupBy("bucket").agg(
-            F.count(F.lit(1)).alias("n_cur")
-        ).coalesce(1).write.mode("overwrite").parquet(
-            f"{state_path}/batch_id={batch_id}"
-        )
-
-    writer = (
-        value_stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(write)
+    return (
+        bucketize(batch_df, value_col, bounds)
+        .groupBy("bucket")
+        .agg(F.count(F.lit(1)).alias("n_cur"))
+        .coalesce(1)
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def read_drift(
@@ -491,51 +411,6 @@ def read_heavy_hitters(
     )
 
 
-def build_ab_ingest_query(
-    value_stream: DataFrame,
-    key_col: str,
-    metric_col: str,
-    state_path: str,
-    checkpoint_dir: str,
-    *,
-    n_variants: int = 2,
-    salt: int = 0,
-    trigger_available_now: bool = False,
-) -> StreamingQuery:
-    """Streaming experiment state (r7): each micro-batch's per-variant
-    sufficient sums (n, Σm, Σm² as exact decimals — mergeable by plain
-    addition) persist at replay-idempotent ``batch_id=N`` overwrite
-    partitions, so the A/B readout is servable mid-experiment without
-    reprocessing history — the metric-moments member of the streaming
-    mergeable-state family (HLL distinct / CMS frequency / drift
-    buckets / this). Serve with :func:`read_ab_readout`; the merged
-    readout is BIT-IDENTICAL to the one-pass batch answer because
-    decimal sums are order-independent (tested)."""
-    from streaming_data_pipeline_azure_spark.operators.experiment import (
-        variant_partials,
-    )
-
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        variant_partials(
-            batch_df,
-            key_col,
-            metric_col,
-            n_variants=n_variants,
-            salt=salt,
-        ).coalesce(1).write.mode("overwrite").parquet(
-            f"{state_path}/batch_id={batch_id}"
-        )
-
-    writer = (
-        value_stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(write)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 def read_ab_readout(spark, state_path: str) -> DataFrame:
     """Serve the streaming experiment state: merge every batch's
     per-variant partials (decimal addition, O(batches x variants)
@@ -552,51 +427,38 @@ def read_ab_readout(spark, state_path: str) -> DataFrame:
     )
 
 
-def build_topk_ingest_query(
-    value_stream: DataFrame,
+def _rank_window(group_cols: list[str], order_col: str, id_col: str):
+    from pyspark.sql import Window
+
+    return Window.partitionBy(*group_cols).orderBy(
+        F.col(order_col).desc(), F.col(id_col).asc()
+    )
+
+
+def topk_partials(
+    batch_df: DataFrame,
     group_cols: list[str],
     order_col: str,
     id_col: str,
     k: int,
-    state_path: str,
-    checkpoint_dir: str,
-    *,
-    trigger_available_now: bool = False,
-) -> StreamingQuery:
-    """Streaming LEADERBOARD state: each micro-batch persists its
-    per-group top-k candidate rows (top-k(A∪B) ⊆ top-k(A) ∪ top-k(B)
-    under inserts — the :class:`~streaming_data_pipeline_azure_spark.
-    operators.incremental.IncrementalTopK` merge property) at
-    replay-idempotent ``batch_id=N`` overwrite partitions; a replayed
-    batch rewrites ITS OWN candidates rather than double-folding them,
-    which a plain append would (duplicate candidate rows double-count
-    in the rank and corrupt the served top-k — why the batch
-    IncrementalTopK class is insert-once by contract and the streaming
-    layout is partition-per-batch). Serve with :func:`read_topk`."""
-    from pyspark.sql import Window
-
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        w = Window.partitionBy(*group_cols).orderBy(
-            F.col(order_col).desc(), F.col(id_col).asc()
+) -> DataFrame:
+    """Mergeable LEADERBOARD partial: the batch's per-group top-k
+    candidate rows (top-k(A∪B) ⊆ top-k(A) ∪ top-k(B) under inserts —
+    the :class:`~streaming_data_pipeline_azure_spark.operators.
+    incremental.IncrementalTopK` merge property). Duplicate candidate
+    rows would double-count in the rank and corrupt the served top-k —
+    why the batch IncrementalTopK class is insert-once by contract and
+    the streaming layout is partition-per-batch."""
+    return (
+        batch_df.select(*group_cols, id_col, order_col)
+        .withColumn(
+            "__rn",
+            F.row_number().over(_rank_window(group_cols, order_col, id_col)),
         )
-        (
-            batch_df.select(*group_cols, id_col, order_col)
-            .withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= k)
-            .drop("__rn")
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(f"{state_path}/batch_id={batch_id}")
-        )
-
-    writer = (
-        value_stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(write)
+        .filter(F.col("__rn") <= k)
+        .drop("__rn")
+        .coalesce(1)
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def read_topk(
@@ -617,15 +479,11 @@ def read_topk(
     collapses to one row per (group, id) keeping the best score
     BEFORE the re-rank, so candidate duplication across batch
     partitions can never surface as duplicate leaderboard rows."""
-    from pyspark.sql import Window
-
     part = spark.read.parquet(state_path)
     cand = part.groupBy(*group_cols, id_col).agg(
         F.max(order_col).alias(order_col)
     )
-    w = Window.partitionBy(*group_cols).orderBy(
-        F.col(order_col).desc(), F.col(id_col).asc()
-    )
+    w = _rank_window(group_cols, order_col, id_col)
     return (
         cand.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
@@ -634,41 +492,6 @@ def read_topk(
             F.col("rank").cast("long").alias("rank"),
         )
     )
-
-
-def build_checksum_ingest_query(
-    value_stream: DataFrame,
-    cols: list[str],
-    state_path: str,
-    checkpoint_dir: str,
-    *,
-    trigger_available_now: bool = False,
-) -> StreamingQuery:
-    """Streaming integrity state: each micro-batch's
-    (n_rows, checksum) partial (validate.table_checksum — an
-    order-insensitive DECIMAL sum, so partials merge by plain
-    addition) persists at replay-idempotent ``batch_id=N`` overwrite
-    partitions. Serve with :func:`read_checksum`; the merged
-    fingerprint equals one batch pass over everything ever ingested —
-    the continuous "did every row arrive exactly once" audit a sink
-    replication pipeline runs against its source."""
-    from streaming_data_pipeline_azure_spark.operators.validate import (
-        table_checksum,
-    )
-
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        table_checksum(batch_df, cols).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{state_path}/batch_id={batch_id}")
-
-    writer = (
-        value_stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(write)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def read_checksum(spark, state_path: str) -> DataFrame:
@@ -680,74 +503,31 @@ def read_checksum(spark, state_path: str) -> DataFrame:
     )
 
 
-def _ohlc_partials(
+def ohlc_partials(
     batch_df: DataFrame, ts_col: str, value_col: str, id_col: str
 ) -> DataFrame:
     """Per-day mergeable OHLC partial: open/close keep their (ts, id)
     ordering keys alongside the value, so partials from different
     micro-batches re-merge with the identical min_by/max_by ranking
-    the one-pass batch operator uses."""
+    the one-pass batch operator uses; highs/lows/counts/decimal totals
+    are plain monoids."""
     v = F.col(value_col)
     order = F.struct(F.col(ts_col), F.col(id_col))
-    return batch_df.groupBy(
-        F.to_date(F.col(ts_col)).alias("day")
-    ).agg(
-        F.min_by(
-            F.struct(
-                F.col(ts_col).alias("ts"),
-                F.col(id_col).alias("tb"),
-                v.alias("v"),
-            ),
-            order,
-        ).alias("o"),
-        F.max(v).alias("high"),
-        F.min(v).alias("low"),
-        F.max_by(
-            F.struct(
-                F.col(ts_col).alias("ts"),
-                F.col(id_col).alias("tb"),
-                v.alias("v"),
-            ),
-            order,
-        ).alias("c"),
-        F.count(F.lit(1)).cast("long").alias("n_events"),
-        F.sum(v.cast("decimal(18,4)")).alias("total"),
+    bound = F.struct(
+        F.col(ts_col).alias("ts"), F.col(id_col).alias("tb"), v.alias("v")
     )
-
-
-def build_ohlc_ingest_query(
-    value_stream: DataFrame,
-    ts_col: str,
-    value_col: str,
-    id_col: str,
-    state_path: str,
-    checkpoint_dir: str,
-    *,
-    trigger_available_now: bool = False,
-) -> StreamingQuery:
-    """Streaming OHLC bar state: per-day partials (open/close carry
-    their ordering keys, highs/lows/counts/decimal totals are plain
-    monoids) persist at replay-idempotent ``batch_id=N`` overwrite
-    partitions. Serve with :func:`read_ohlc`; the merged bars are
-    BIT-IDENTICAL to the one-pass batch :func:`…temporal.ohlc` over
-    everything ingested (tested) — the time-series member of the
-    streaming mergeable-state family."""
-
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        _ohlc_partials(
-            batch_df, ts_col, value_col, id_col
-        ).coalesce(1).write.mode("overwrite").parquet(
-            f"{state_path}/batch_id={batch_id}"
+    return (
+        batch_df.groupBy(F.to_date(F.col(ts_col)).alias("day"))
+        .agg(
+            F.min_by(bound, order).alias("o"),
+            F.max(v).alias("high"),
+            F.min(v).alias("low"),
+            F.max_by(bound, order).alias("c"),
+            F.count(F.lit(1)).cast("long").alias("n_events"),
+            F.sum(v.cast("decimal(18,4)")).alias("total"),
         )
-
-    writer = (
-        value_stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(write)
+        .coalesce(1)
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def read_ohlc(spark, state_path: str) -> DataFrame:
@@ -767,25 +547,20 @@ def read_ohlc(spark, state_path: str) -> DataFrame:
     )
 
 
-def build_decayed_ingest_query(
-    event_stream: DataFrame,
+def decayed_partials(
+    batch_df: DataFrame,
     key_col: str,
     ts_col: str,
     value_col: str,
-    state_path: str,
-    checkpoint_dir: str,
     *,
     ref_date: str,
     half_life_days: int,
-    trigger_available_now: bool = False,
-) -> StreamingQuery:
-    """Streaming recency-weighted engagement state: each micro-batch's
-    per-key (n_events, decayed_q) partials
-    (temporal.decayed_sum — quantized-INTEGER decay contributions
-    against a FIXED reference date, so partials merge by plain
-    addition and batch boundaries cannot perturb a single bit)
-    persist at replay-idempotent ``batch_id=N`` overwrite partitions.
-    Serve with :func:`read_decayed`. The fixed ref_date is the
+) -> DataFrame:
+    """Mergeable recency-weighted engagement partial: per-key
+    (n_events, decayed_q) from :func:`…temporal.decayed_sum` —
+    quantized-INTEGER decay contributions against a FIXED reference
+    date, so partials merge by plain addition and batch boundaries
+    cannot perturb a single bit. The fixed ref_date is the
     mergeability contract: scores are "as of ref_date" and a serving
     layer re-ages them by multiplying 2^-(elapsed half-lives) — it
     does NOT silently re-anchor per batch."""
@@ -793,22 +568,10 @@ def build_decayed_ingest_query(
         decayed_sum,
     )
 
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        decayed_sum(
-            batch_df, key_col, ts_col, value_col,
-            ref_date=ref_date, half_life_days=half_life_days,
-        ).drop("decayed").write.mode("overwrite").parquet(
-            f"{state_path}/batch_id={batch_id}"
-        )
-
-    writer = (
-        event_stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(write)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return decayed_sum(
+        batch_df, key_col, ts_col, value_col,
+        ref_date=ref_date, half_life_days=half_life_days,
+    ).drop("decayed")
 
 
 def read_decayed(
@@ -895,48 +658,6 @@ def build_conversion_join_query(
     return writer.start()
 
 
-def build_histogram_ingest_query(
-    value_stream: DataFrame,
-    group_cols: list[str],
-    value_col: str,
-    state_path: str,
-    checkpoint_dir: str,
-    *,
-    trigger_available_now: bool = False,
-) -> StreamingQuery:
-    """Streaming QUANTILE state (r7 s4): each micro-batch folds its
-    per-group log2-histogram bucket counts into a persisted state
-    store, so "p95 event value so far" is servable at any time without
-    reprocessing history — the percentile member of the mergeable
-    streaming-state family (HLL distinct, CMS frequency, moment A/B,
-    OHLC, decayed sums, checksums).
-
-    Replay-idempotence, same contract as the other ingests: batch N's
-    partials land at ``state_path/batch_id=N`` with OVERWRITE — a
-    replayed batch rewrites identical bucket counts instead of
-    double-counting. State grows O(batches × groups × ~64 buckets)
-    tiny integer rows; serve with :func:`read_histogram_percentiles`,
-    whose addition-merge is bit-identical to a one-pass batch build
-    (tested)."""
-    from streaming_data_pipeline_azure_spark.operators.profile import (
-        histogram_partials,
-    )
-
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        histogram_partials(batch_df, group_cols, value_col).write.mode(
-            "overwrite"
-        ).parquet(f"{state_path}/batch_id={batch_id}")
-
-    writer = (
-        value_stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(write)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 def read_histogram_percentiles(
     spark,
     state_path: str,
@@ -993,19 +714,10 @@ def build_novelty_ingest_query(
             release_caches()
             return
         stats = index.probe_and_fold(batch, id_col, text_col)
-        stats.write.mode("overwrite").parquet(
-            f"{stats_path}/batch_id={batch_id}"
-        )
+        write_batch_partition(stats, stats_path, batch_id)
         release_caches()
 
-    writer = (
-        doc_stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(write)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(doc_stream, checkpoint_dir, write, trigger_available_now)
 
 
 def read_novelty(spark, stats_path: str) -> DataFrame:

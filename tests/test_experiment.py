@@ -194,7 +194,7 @@ def test_streaming_ab_readout_matches_batch(spark, tmp_path):
         variant_partials,
     )
     from streaming_data_pipeline_azure_spark.streaming.pipeline import (
-        build_ab_ingest_query,
+        build_state_ingest_query,
         read_ab_readout,
         run_to_completion,
     )
@@ -214,9 +214,9 @@ def test_streaming_ab_readout_matches_batch(spark, tmp_path):
         )
 
     state = str(tmp_path / "ab_state")
-    q = build_ab_ingest_query(
-        stream(), "k", "m", state, str(tmp_path / "ab_ckpt"),
-        salt=9, trigger_available_now=True,
+    q = build_state_ingest_query(
+        stream(), lambda b: variant_partials(b, "k", "m", salt=9), state,
+        str(tmp_path / "ab_ckpt"), trigger_available_now=True,
     )
     run_to_completion(q)
     served = sorted(
@@ -235,9 +235,9 @@ def test_streaming_ab_readout_matches_batch(spark, tmp_path):
     )
     assert served == direct
 
-    q2 = build_ab_ingest_query(
-        stream(), "k", "m", state, str(tmp_path / "ab_ckpt2"),
-        salt=9, trigger_available_now=True,
+    q2 = build_state_ingest_query(
+        stream(), lambda b: variant_partials(b, "k", "m", salt=9), state,
+        str(tmp_path / "ab_ckpt2"), trigger_available_now=True,
     )
     run_to_completion(q2)
     again = sorted(

@@ -403,6 +403,61 @@ def test_sink_delete_keys_takedown(spark, tmp_path):
     }
 
 
+def test_sink_delete_keys_before_first_write(spark, tmp_path):
+    """delete_keys without a batch_id on a sink that was never written
+    stamps batch 0 instead of failing on the missing log; a later
+    write_batch still resurrects the key."""
+    sink = ParquetUpsertSink(str(tmp_path / "fresh_sink"), key="k")
+    sink.delete_keys(spark, ["a"])
+    stamps = spark.read.parquet(str(tmp_path / "fresh_sink" / "deletes"))
+    assert [(r["k"], r["batch_id"]) for r in stamps.collect()] == [("a", 0)]
+    sink.write_batch(spark.createDataFrame([("a", 1)], "k string, v int"), 1)
+    assert [(r["k"], r["v"]) for r in sink.read(spark).collect()] == [("a", 1)]
+
+
+def test_write_batch_partition_replaces_only_its_batch(spark, tmp_path):
+    """Rewriting batch N replaces partition N alone — every other
+    batch's files stay byte-for-byte unchanged — and an empty rewrite
+    leaves partition N intact (the corpus ingests' early return on an
+    empty replay relies on it)."""
+    from streaming_data_pipeline_azure_spark.sources.sinks import (
+        write_batch_partition,
+    )
+
+    root = tmp_path / "parts"
+
+    def write(batch_id, rows):
+        write_batch_partition(
+            spark.createDataFrame(rows, "k string, v int"), str(root), batch_id
+        )
+
+    def files(batch_id):
+        d = root / f"batch_id={batch_id}"
+        return {f.name: f.read_bytes() for f in d.iterdir()}
+
+    def rows():
+        return sorted(
+            (r["batch_id"], r["k"], r["v"])
+            for r in spark.read.parquet(str(root)).collect()
+        )
+
+    for b in range(3):
+        write(b, [(f"k{b}", b), (f"j{b}", b)])
+    before = {b: files(b) for b in (0, 2)}
+
+    write(1, [("k1", 10)])  # replay of batch 1 with different rows
+    assert {b: files(b) for b in (0, 2)} == before
+    assert rows() == [
+        (0, "j0", 0), (0, "k0", 0), (1, "k1", 10), (2, "j2", 2), (2, "k2", 2),
+    ]
+
+    batch1 = files(1)
+    write(1, [])  # empty rewrite: nothing written, batch 1 kept
+    assert files(1) == batch1
+    assert {b: files(b) for b in (0, 2)} == before
+    assert len(rows()) == 5
+
+
 def test_sink_compaction_is_generational_and_crash_safe(spark, tmp_path):
     """Generation-swap compaction (VERDICT r2 #6): survivors are staged
     into gen=G+1 and become live only when the _COMMITTED marker lands.
@@ -849,10 +904,11 @@ def test_streaming_cms_heavy_hitters_matches_batch(spark, tmp_path):
     import json as _json
 
     from streaming_data_pipeline_azure_spark.operators.profile import (
+        cms_partials,
         heavy_hitters_cms,
     )
     from streaming_data_pipeline_azure_spark.streaming.pipeline import (
-        build_cms_ingest_query,
+        build_state_ingest_query,
         read_heavy_hitters,
     )
 
@@ -872,8 +928,9 @@ def test_streaming_cms_heavy_hitters_matches_batch(spark, tmp_path):
         .json(str(src))
     )
     state = str(tmp_path / "cms_state")
-    q = build_cms_ingest_query(
-        stream, "token", state, str(tmp_path / "cms_ckpt"),
+    q = build_state_ingest_query(
+        stream, lambda b: cms_partials(b, "token"), state,
+        str(tmp_path / "cms_ckpt"),
         trigger_available_now=True,
     )
     run_to_completion(q)
@@ -896,8 +953,9 @@ def test_streaming_cms_heavy_hitters_matches_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .json(str(src))
     )
-    q2 = build_cms_ingest_query(
-        replay, "token", state, str(tmp_path / "cms_ckpt2"),
+    q2 = build_state_ingest_query(
+        replay, lambda b: cms_partials(b, "token"), state,
+        str(tmp_path / "cms_ckpt2"),
         trigger_available_now=True,
     )
     run_to_completion(q2)
@@ -917,7 +975,7 @@ def test_streaming_hll_distinct_matches_batch(spark, tmp_path):
         estimate_distinct,
     )
     from streaming_data_pipeline_azure_spark.streaming.pipeline import (
-        build_hll_ingest_query,
+        build_state_ingest_query,
         read_distinct_counts,
     )
 
@@ -938,8 +996,9 @@ def test_streaming_hll_distinct_matches_batch(spark, tmp_path):
         .json(str(src))
     )
     state = str(tmp_path / "hll_state")
-    q = build_hll_ingest_query(
-        stream, ["day"], "user", state, str(tmp_path / "hll_ckpt"),
+    q = build_state_ingest_query(
+        stream, lambda b: distinct_partials(b, ["day"], "user"), state,
+        str(tmp_path / "hll_ckpt"),
         trigger_available_now=True,
     )
     run_to_completion(q)
@@ -966,8 +1025,9 @@ def test_streaming_hll_distinct_matches_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .json(str(src))
     )
-    q2 = build_hll_ingest_query(
-        replay, ["day"], "user", state, str(tmp_path / "hll_ckpt2"),
+    q2 = build_state_ingest_query(
+        replay, lambda b: distinct_partials(b, ["day"], "user"), state,
+        str(tmp_path / "hll_ckpt2"),
         trigger_available_now=True,
     )
     run_to_completion(q2)
@@ -1141,7 +1201,8 @@ def test_streaming_drift_state_matches_batch(spark, tmp_path):
         distribution_drift,
     )
     from streaming_data_pipeline_azure_spark.streaming.pipeline import (
-        build_drift_ingest_query,
+        build_state_ingest_query,
+        drift_partials,
         read_drift,
     )
     from pyspark.sql import Window, functions as FF
@@ -1172,8 +1233,9 @@ def test_streaming_drift_state_matches_batch(spark, tmp_path):
             .option("maxFilesPerTrigger", "1")
             .json(str(src))
         )
-        return build_drift_ingest_query(
-            stream, "v", bounds, str(tmp_path / "drift_state"),
+        return build_state_ingest_query(
+            stream, lambda b: drift_partials(b, "v", bounds),
+            str(tmp_path / "drift_state"),
             str(tmp_path / ckpt), trigger_available_now=True,
         )
 
@@ -1210,7 +1272,7 @@ def test_streaming_checksum_matches_batch_and_replays(spark, tmp_path):
         table_checksum,
     )
     from streaming_data_pipeline_azure_spark.streaming.pipeline import (
-        build_checksum_ingest_query,
+        build_state_ingest_query,
         read_checksum,
         run_to_completion,
     )
@@ -1230,8 +1292,9 @@ def test_streaming_checksum_matches_batch_and_replays(spark, tmp_path):
         )
 
     state = str(tmp_path / "ck_state")
-    q = build_checksum_ingest_query(
-        stream(), ["k", "s"], state, str(tmp_path / "ck_ckpt"),
+    q = build_state_ingest_query(
+        stream(), lambda b: table_checksum(b, ["k", "s"]), state,
+        str(tmp_path / "ck_ckpt"),
         trigger_available_now=True,
     )
     run_to_completion(q)
@@ -1244,13 +1307,36 @@ def test_streaming_checksum_matches_batch_and_replays(spark, tmp_path):
         direct["n_rows"],
         direct["checksum"],
     )
-    q2 = build_checksum_ingest_query(
-        stream(), ["k", "s"], state, str(tmp_path / "ck_ckpt2"),
+    q2 = build_state_ingest_query(
+        stream(), lambda b: table_checksum(b, ["k", "s"]), state,
+        str(tmp_path / "ck_ckpt2"),
         trigger_available_now=True,
     )
     run_to_completion(q2)
     again = read_checksum(spark, state).collect()[0]
     assert (again["n_rows"], again["checksum"]) == (
+        served["n_rows"],
+        served["checksum"],
+    )
+
+    # replay batch 0 ALONE (a crash before its commit): only partition
+    # 0 is rewritten, batch 1's partials survive. Which file landed in
+    # batch 0 is read off its partial, not assumed (same-mtime files
+    # order by listing).
+    n0 = spark.read.parquet(f"{state}/batch_id=0").first()["n_rows"]
+    only0 = tmp_path / "ck_in_batch0"
+    only0.mkdir()
+    name0 = "b0.json" if n0 == len(b1) else "b1.json"
+    (only0 / name0).write_text((src / name0).read_text())
+    q3 = build_state_ingest_query(
+        spark.readStream.schema("k long, s string").json(str(only0)),
+        lambda b: table_checksum(b, ["k", "s"]), state,
+        str(tmp_path / "ck_ckpt3"),
+        trigger_available_now=True,
+    )
+    run_to_completion(q3)
+    once = read_checksum(spark, state).collect()[0]
+    assert (once["n_rows"], once["checksum"]) == (
         served["n_rows"],
         served["checksum"],
     )
@@ -1266,7 +1352,8 @@ def test_streaming_ohlc_matches_batch(spark, tmp_path):
         ohlc,
     )
     from streaming_data_pipeline_azure_spark.streaming.pipeline import (
-        build_ohlc_ingest_query,
+        build_state_ingest_query,
+        ohlc_partials,
         read_ohlc,
         run_to_completion,
     )
@@ -1297,8 +1384,9 @@ def test_streaming_ohlc_matches_batch(spark, tmp_path):
 
     state = str(tmp_path / "ohlc_state")
     run_to_completion(
-        build_ohlc_ingest_query(
-            stream(), "ts", "v", "event_id", state,
+        build_state_ingest_query(
+            stream(), lambda b: ohlc_partials(b, "ts", "v", "event_id"),
+            state,
             str(tmp_path / "ohlc_ck"), trigger_available_now=True,
         )
     )
@@ -1321,8 +1409,9 @@ def test_streaming_ohlc_matches_batch(spark, tmp_path):
     assert served["2024-03-01"][0] == 10.0   # open from batch 1
     assert served["2024-03-01"][3] == 20.0   # close from batch 2
     run_to_completion(
-        build_ohlc_ingest_query(
-            stream(), "ts", "v", "event_id", state,
+        build_state_ingest_query(
+            stream(), lambda b: ohlc_partials(b, "ts", "v", "event_id"),
+            state,
             str(tmp_path / "ohlc_ck2"), trigger_available_now=True,
         )
     )
@@ -1343,7 +1432,8 @@ def test_streaming_decayed_state_matches_batch_and_replays(spark, tmp_path):
         decayed_sum,
     )
     from streaming_data_pipeline_azure_spark.streaming.pipeline import (
-        build_decayed_ingest_query,
+        build_state_ingest_query,
+        decayed_partials,
         read_decayed,
         run_to_completion,
     )
@@ -1369,10 +1459,14 @@ def test_streaming_decayed_state_matches_batch_and_replays(spark, tmp_path):
             .json(str(src))
         )
 
+    def partials(b):
+        return decayed_partials(
+            b, "u", "ts", "v", ref_date="2024-02-01", half_life_days=7
+        )
+
     state = str(tmp_path / "dk_state")
-    q = build_decayed_ingest_query(
-        stream(), "u", "ts", "v", state, str(tmp_path / "dk_ckpt"),
-        ref_date="2024-02-01", half_life_days=7,
+    q = build_state_ingest_query(
+        stream(), partials, state, str(tmp_path / "dk_ckpt"),
         trigger_available_now=True,
     )
     run_to_completion(q)
@@ -1394,9 +1488,8 @@ def test_streaming_decayed_state_matches_batch_and_replays(spark, tmp_path):
         ).collect()
     }
     assert served == direct
-    q2 = build_decayed_ingest_query(
-        stream(), "u", "ts", "v", state, str(tmp_path / "dk_ckpt2"),
-        ref_date="2024-02-01", half_life_days=7,
+    q2 = build_state_ingest_query(
+        stream(), partials, state, str(tmp_path / "dk_ckpt2"),
         trigger_available_now=True,
     )
     run_to_completion(q2)
@@ -1502,7 +1595,7 @@ def test_streaming_histogram_percentiles_match_batch(spark, tmp_path):
         histogram_percentiles,
     )
     from streaming_data_pipeline_azure_spark.streaming.pipeline import (
-        build_histogram_ingest_query,
+        build_state_ingest_query,
         read_histogram_percentiles,
     )
 
@@ -1522,8 +1615,9 @@ def test_streaming_histogram_percentiles_match_batch(spark, tmp_path):
         .json(str(src))
     )
     state = str(tmp_path / "hist_state")
-    q = build_histogram_ingest_query(
-        stream, ["g"], "v", state, str(tmp_path / "hist_ckpt"),
+    q = build_state_ingest_query(
+        stream, lambda b: histogram_partials(b, ["g"], "v"), state,
+        str(tmp_path / "hist_ckpt"),
         trigger_available_now=True,
     )
     run_to_completion(q)
@@ -1553,8 +1647,9 @@ def test_streaming_histogram_percentiles_match_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .json(str(src))
     )
-    q2 = build_histogram_ingest_query(
-        replay, ["g"], "v", state, str(tmp_path / "hist_ckpt2"),
+    q2 = build_state_ingest_query(
+        replay, lambda b: histogram_partials(b, ["g"], "v"), state,
+        str(tmp_path / "hist_ckpt2"),
         trigger_available_now=True,
     )
     run_to_completion(q2)
@@ -1647,9 +1742,10 @@ def test_streaming_topk_matches_batch_and_replays(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from streaming_data_pipeline_azure_spark.streaming.pipeline import (
-        build_topk_ingest_query,
+        build_state_ingest_query,
         read_topk,
         run_to_completion,
+        topk_partials,
     )
 
     b1 = [{"id": i, "g": f"g{i % 2}", "v": float((i * 37) % 97)}
@@ -1662,11 +1758,12 @@ def test_streaming_topk_matches_batch_and_replays(spark, tmp_path):
     (src / "b1.json").write_text("\n".join(_json.dumps(r) for r in b2))
 
     state = str(tmp_path / "tk_state")
-    q = build_topk_ingest_query(
+    q = build_state_ingest_query(
         spark.readStream.schema("id long, g string, v double")
         .option("maxFilesPerTrigger", "1")
         .json(str(src)),
-        ["g"], "v", "id", 5, state, str(tmp_path / "tk_ckpt"),
+        lambda b: topk_partials(b, ["g"], "v", "id", 5),
+        state, str(tmp_path / "tk_ckpt"),
         trigger_available_now=True,
     )
     run_to_completion(q)
